@@ -17,7 +17,8 @@ DataFrame plans + vectorized pandas/Arrow UDFs:
   sites, sitemaps, pre-existing index) and readers.
 - ``plans/``      the crawl micro-batch driver loop with per-batch
   checkpoints, lineage and metrics.
-- ``streaming/``  generic micro-batch/state helpers.
+- ``streaming/``  Structured-Streaming consumers: the incremental
+  near-dup admission gate and a CDC feed tailing the index sink.
 """
 
 __version__ = "0.1.0"

@@ -17,10 +17,16 @@ micro-batch over the whole (multi-site) frontier:
    main.py:99 — this run's own upserts are invisible to is_modified),
    fetch-status join, warc_ts join (column-pruned: html is NOT read
    here), skip_reason classification (F4/F7/F8);
-4. loop: politeness-scheduled batch → page-store join (html/text read
-   only for admitted rows) → extraction projection → upsert append →
-   host-state update (429 doubling) → exact anti-join of processed
-   rows → per-batch checkpoint commit.
+4. loop, one step per batch in both modes: join the prefetched
+   politeness schedule → write the previous batch's checkpoint →
+   host-state update (429 doubling) + exact anti-join of the admitted
+   rows → page-store join (html/text read only for admitted rows) →
+   extraction projection → upsert append → (follow-links) outlink
+   discovery. The prefetch thread runs ``_discover_schedule``: link
+   discovery over the batch's outlinks (none in plain mode) and then
+   the next schedule. Plain mode is the follow-links step with no
+   links: its prefetch launches before extraction, because its next
+   schedule depends only on the state transition.
 
 Determinism: the schedule is a pure function of (frontier,
 host_state); crawl_seq is carried into the index (lineage) so the
@@ -30,15 +36,18 @@ run_meta.json so resume is bit-stable (no wall-clock in the plan).
 Resume: checkpoints/batch=K holds ONE combined *state* parquet — for a
 full snapshot (batch -1 and every ``ckpt_full_every`` batches) the
 whole remaining frontier + host rows, for a delta the batch's tiny
-politeness-capped processed crawl_seq set + host rows — one write,
-one job either way, with a commit marker recording the kind written
-LAST (row kinds inside the file split on the crawl_seq null pattern). Delta
-checkpoints bound write amplification: a full rewrite per batch is
-O(frontier × batches) at a 10^10-row frontier, while a delta is
-proportional to the batch. Resume reconstructs
-``remaining = last_full_snapshot ANTI-JOIN ∪(processed deltas)``;
-a crash between sink append and commit replays batch K idempotently
-(upsert-by-UID makes the replay a no-op).
+politeness-capped processed crawl_seq set + changed host rows + the
+rows discovered at that batch — one write, one job either way, with a
+``_COMMIT`` marker recording the kind (``full`` | ``delta``) written
+LAST (row kinds inside the file split on the crawl_seq null pattern).
+Every batch's checkpoint is written at the next prefetch join, once
+its discoveries are known, so a full snapshot holds the grown
+frontier. Delta checkpoints bound write amplification: a full rewrite
+per batch is O(frontier × batches) at a 10^10-row frontier, while a
+delta is proportional to the batch. Resume reconstructs
+``remaining = (last_full_snapshot ∪ discovered) ANTI-JOIN
+∪(processed deltas)``; a crash between sink append and commit replays
+batch K idempotently (upsert-by-UID makes the replay a no-op).
 
 Compaction: when the sink's MOR delta log exceeds ``compact_every``
 generations it is folded into a fresh base snapshot mid-run, bounding
@@ -59,7 +68,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ftw_crawler_spark import config as cfg
-from ftw_crawler_spark.operators import politeness, robots, seen
+from ftw_crawler_spark.functions.urls import canonical_url_col
+from ftw_crawler_spark.operators import linkgraph, politeness, robots, seen
 from ftw_crawler_spark.operators.extraction import extract_documents
 from ftw_crawler_spark.operators.incremental import (
     is_modified_col, purge_candidates, with_last_indexed)
@@ -82,17 +92,12 @@ _DISCOVERED_SEQ_MOD = 1 << 61
 
 
 def load_run_metrics(out_dir: str) -> list:
-    """All metrics rows of a run: the legacy inline list in
-    run_meta.json plus the append-only ``metrics.jsonl`` lines (the
-    per-batch persistence path — one O(1) append per batch instead of
-    rewriting the whole history, which is O(batches²) file I/O over a
-    long crawl). A torn final line (crash mid-append) is skipped; the
-    metrics are observability/lineage, never resume inputs."""
+    """All metrics rows of a run: the append-only ``metrics.jsonl``
+    lines (one O(1) append per batch instead of rewriting the whole
+    history, which is O(batches²) file I/O over a long crawl). A torn
+    final line (crash mid-append) is skipped; the metrics are
+    observability/lineage, never resume inputs."""
     rows: list = []
-    meta_path = os.path.join(out_dir, "run_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            rows.extend(json.load(fh).get("metrics", []))
     jl = os.path.join(out_dir, "metrics.jsonl")
     if os.path.exists(jl):
         with open(jl) as fh:
@@ -339,7 +344,15 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
               compact_min_bytes: int = 256 << 20,
               follow_links: bool = False,
               recrawl_from: str | None = None) -> CrawlResult:
-    """``follow_links`` turns on link-following frontier discovery (the
+    """Both modes run the same per-batch step (module docstring): one
+    prefetch callable (``_discover_schedule``), one join site, one
+    checkpoint policy. Every batch's checkpoint is handed to the
+    background writer at the NEXT prefetch join, once the batch's
+    discoveries are known (none in plain mode), so the per-batch
+    ``sec_schedule`` covers that join plus the hand-off and the state
+    transition, and ``sec_checkpoint`` times mid-run compaction only.
+
+    ``follow_links`` turns on link-following frontier discovery (the
     north rule's priority queue actually GROWING from discovered
     anchors — the sitemap-driven reference never follows links): each
     batch's extraction emits resolved outlinks from its shared DOM
@@ -441,7 +454,6 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
         committed = _committed_batches(ckpt_root)
         resuming = resume and bool(committed)
         enqueued = None
-        n_enqueued = 0
         idx_filter = None   # fresh path builds one over the base index
 
         if resuming:
@@ -493,8 +505,6 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
                     os.path.join(ckpt_root, f"batch={b}", "state")
                     for b in committed
                     if _ckpt_kind(ckpt_root, b) == "delta"]
-                delta_states = [p for p in delta_states
-                                if os.path.isdir(p)]
                 if delta_states:
                     st = (spark.read.option("mergeSchema", "true")
                           .parquet(*delta_states))
@@ -510,8 +520,7 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
             crawl_time = crawl_time or DEFAULT_CRAWL_TIME
             not_due = _build_not_due(crawl_time)
             with open(meta_path, "w") as fh:
-                json.dump({"crawl_time": crawl_time.isoformat(),
-                           "metrics": []}, fh)
+                json.dump({"crawl_time": crawl_time.isoformat()}, fh)
             if os.path.exists(metrics_jsonl):   # stale from a prior run
                 os.remove(metrics_jsonl)
             metrics = []
@@ -634,26 +643,7 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
             start_batch = 0
 
         sdf = sites_df(spark, sites)
-        def _schedule(rem, hs):
-            """Materialize one politeness batch plus its admission metric:
-            ONE job fills the cache AND yields both the admitted total and
-            the per-host lineage metric (north rule) — the per-batch
-            driver latency budget is the sandbox bottleneck, so every
-            folded job counts. Runs on the prefetch thread: batch N+1's
-            schedule is a pure function of (remaining, host_state) after
-            batch N's admission, both of which are known before batch N
-            extracts — so the schedule job overlaps the extraction job."""
-            b = politeness.select_batch(rem, hs, batch_seconds,
-                                        order_mode=order_mode).cache()
-            ph = {r["host"]: r["n"] for r in
-                  b.groupBy("host").agg(
-                      F.count(F.lit(1)).alias("n")).collect()}
-            return b, ph
-
         if follow_links:
-            from ftw_crawler_spark.operators.linkgraph import (
-                candidates_from_links)
-
             # host → site dim for scoping + site_id assignment of
             # discovered urls (two sites on one host: min site_id wins,
             # deterministically). Keyed on the HOSTNAME (no port) so it
@@ -703,15 +693,11 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
             # filter never exists whole). `add` runs only on the
             # prefetch thread — exactly one _discover_schedule is in
             # flight at a time, satisfying the single-writer contract.
-            from ftw_crawler_spark.functions.urls import (
-                canonical_url_col)
-            from ftw_crawler_spark.operators import seen as seenmod
-
             def _canon_urls(df):
                 return df.select(
                     canonical_url_col(F.col("loc")).alias("url"))
 
-            url_filter = seenmod.IncrementalUrlFilter(
+            url_filter = seen.IncrementalUrlFilter(
                 _canon_urls(enqueued), "url",
                 expected_items=max(4 * n_enqueued, 1024), fpp=0.03)
 
@@ -725,147 +711,144 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
             # next launches).
             enq_segments = [0]
 
-            def _discover_schedule(rem, hs, links, enq, n_enq):
-                """Link discovery over the just-extracted batch's
-                outlinks, then the next schedule — one prefetch-thread
-                unit so the schedule stays a pure function of the
-                post-discovery frontier (resume replays it exactly)."""
-                disc, n_new, n_disc = None, 0, 0
-                if links is not None:
-                    cand = candidates_from_links(
-                        links, enq, known_url_col="loc",
-                        scope_hosts=host_dim.select("host"),
-                        drop_traps=True, known_bloom=url_filter)
-                    # lazy checkpoint: the counts agg right below is
-                    # the materializing action, so plan-run + checkpoint
-                    # + counts are ONE job instead of two (the unit is
-                    # a chain of latency-bound jobs — job count is the
-                    # cost at sandbox scale, BASELINE.md)
-                    ann = _annotate_discovered(
-                        cand, world, sdf, host_dim, force,
-                        index_filter=_index0_filter(),
-                        not_due=not_due).localCheckpoint(
-                            eager=False)
-                    if url_filter.is_broadcastable:
-                        # FUSED admission job (small-filter serving
-                        # form): the counts aggregation and the
-                        # enqueued-filter bloom delta come out of ONE
-                        # Arrow pass/action — the delta build was a
-                        # whole second driver job per discovering
-                        # batch (A/B in BASELINE.md follow-links
-                        # notes); add_bytes then merges driver-side
-                        # with zero jobs, bit-identical to add()
-                        rows = seenmod.fused_delta_counts_plan(
-                            ann.withColumn(
-                                "__curl",
-                                canonical_url_col(F.col("loc"))),
-                            "__curl", url_filter.shape,
-                            "skip_reason").collect()
-                        n_new = sum(r["n"] for r in rows
-                                    if r["s"] == -1)
-                        n_disc = sum(r["ok"] for r in rows
-                                     if r["s"] == -1)
-                        if n_new:
-                            url_filter.add_bytes(
-                                seenmod.assemble_bloom_bytes(
-                                    [(r["s"], r["bits"]) for r in rows
-                                     if r["s"] >= 0], url_filter.shape))
-                    else:
-                        # relation form: the delta never exists as
-                        # driver bytes — keep the two-action path
-                        counts = ann.agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.count(F.when(
-                                F.col("skip_reason").isNull(),
-                                F.lit(1))).alias("ok")).collect()
-                        n_new, n_disc = counts[0]["n"], counts[0]["ok"]
-                        if n_new:
-                            # O(batch) delta into the incremental filter
-                            url_filter.add(_canon_urls(ann), "url")
+        def _discover_schedule(rem, hs, links, enq):
+            """The prefetch-thread unit of both modes: link discovery
+            over the just-extracted batch's outlinks (skipped when
+            ``links`` is None — always in plain mode, and for the first
+            schedule of a follow-links run), then the next politeness
+            batch. One unit, so the schedule stays a pure function of
+            the post-discovery frontier (resume replays it exactly).
+
+            The schedule is materialized with its admission metric in
+            ONE job that fills the cache AND yields both the admitted
+            total and the per-host lineage metric (north rule) — the
+            per-batch driver latency budget is the sandbox bottleneck,
+            so every folded job counts."""
+            disc, n_new, n_disc = None, 0, 0
+            if links is not None:
+                cand = linkgraph.candidates_from_links(
+                    links, enq, known_url_col="loc",
+                    scope_hosts=host_dim.select("host"),
+                    drop_traps=True, known_bloom=url_filter)
+                # lazy checkpoint: the counts agg right below is the
+                # materializing action, so plan-run + checkpoint +
+                # counts are ONE job instead of two (the unit is a
+                # chain of latency-bound jobs — job count is the cost
+                # at sandbox scale, BASELINE.md)
+                ann = _annotate_discovered(
+                    cand, world, sdf, host_dim, force,
+                    index_filter=_index0_filter(),
+                    not_due=not_due).localCheckpoint(eager=False)
+                if url_filter.is_broadcastable:
+                    # FUSED admission job (small-filter serving form):
+                    # the counts aggregation and the enqueued-filter
+                    # bloom delta come out of ONE Arrow pass/action —
+                    # the delta build was a whole second driver job per
+                    # discovering batch (A/B in BASELINE.md
+                    # follow-links notes); add_bytes then merges
+                    # driver-side with zero jobs, bit-identical to add()
+                    rows = seen.fused_delta_counts_plan(
+                        ann.withColumn("__curl",
+                                       canonical_url_col(F.col("loc"))),
+                        "__curl", url_filter.shape,
+                        "skip_reason").collect()
+                    n_new = sum(r["n"] for r in rows if r["s"] == -1)
+                    n_disc = sum(r["ok"] for r in rows if r["s"] == -1)
                     if n_new:
-                        # lazy union of two checkpointed relations — no
-                        # frontier-sized copy per batch; periodic eager
-                        # compaction bounds the union fan-in
-                        enq = enq.unionByName(ann.select("loc"))
-                        enq_segments[0] += 1
-                        if enq_segments[0] >= ckpt_full_every:
-                            enq = enq.localCheckpoint(eager=True)
-                            enq_segments[0] = 0
-                    if n_disc:
-                        # a plain filter over ann's checkpointed blocks
-                        # — no checkpoint of its own (that was a whole
-                        # extra job for n_disc rows); the main loop's
-                        # full-checkpoint cadence compacts `remaining`
-                        disc = (ann.filter(F.col("skip_reason").isNull())
-                                .select(*rem.columns))
-                        rem = rem.unionByName(disc)
-                b, ph = _schedule(rem, hs)
-                return b, ph, rem, enq, n_enq + n_new, disc, n_disc
+                        url_filter.add_bytes(seen.assemble_bloom_bytes(
+                            [(r["s"], r["bits"]) for r in rows
+                             if r["s"] >= 0], url_filter.shape))
+                else:
+                    # relation form: the delta never exists as driver
+                    # bytes — keep the two-action path
+                    counts = ann.agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.count(F.when(F.col("skip_reason").isNull(),
+                                       F.lit(1))).alias("ok")).collect()
+                    n_new, n_disc = counts[0]["n"], counts[0]["ok"]
+                    if n_new:
+                        # O(batch) delta into the incremental filter
+                        url_filter.add(_canon_urls(ann), "url")
+                if n_new:
+                    # lazy union of two checkpointed relations — no
+                    # frontier-sized copy per batch; periodic eager
+                    # compaction bounds the union fan-in
+                    enq = enq.unionByName(ann.select("loc"))
+                    enq_segments[0] += 1
+                    if enq_segments[0] >= ckpt_full_every:
+                        enq = enq.localCheckpoint(eager=True)
+                        enq_segments[0] = 0
+                if n_disc:
+                    # a plain filter over ann's checkpointed blocks — no
+                    # checkpoint of its own (that was a whole extra job
+                    # for n_disc rows); the main loop's full-checkpoint
+                    # cadence compacts `remaining`
+                    disc = (ann.filter(F.col("skip_reason").isNull())
+                            .select(*rem.columns))
+                    rem = rem.unionByName(disc)
+            b = politeness.select_batch(rem, hs, batch_seconds,
+                                        order_mode=order_mode).cache()
+            ph = {r["host"]: r["n"] for r in
+                  b.groupBy("host").agg(
+                      F.count(F.lit(1)).alias("n")).collect()}
+            return b, ph, rem, enq, n_new, disc, n_disc
 
         batch_id = start_batch
         n_batches = 0
-        if follow_links:
-            pending = _BgTask(_discover_schedule, remaining, host_state,
-                              None, enqueued, n_enqueued)
-        else:
-            pending = _BgTask(_schedule, remaining, host_state)
-        batch = None
+        pending = _BgTask(_discover_schedule, remaining, host_state,
+                          None, enqueued)
         prev_docs = None
-        deferred = None   # follow mode:
+        # the last batch's checkpoint inputs, written at the next join:
         # (batch_id, is_full, processed, pre-transition host_state)
+        deferred = None
 
-        def _flush_deferred(disc, n_disc, n_added):
+        def _flush_deferred(disc, n_disc, n_new):
             """Write the PREVIOUS batch's checkpoint — deferred until
             its discoveries are known, so a full snapshot reflects the
             grown frontier and a delta carries the discovered rows the
-            resume replay must re-add."""
+            resume replay must re-add. Exactly one writer is
+            outstanding: batch K's checkpoint commits before batch
+            K+1's is written, so the on-disk marker sequence never has
+            gaps (resume's delta replay assumes a committed prefix)."""
             nonlocal ckpt_writer, deferred
             if deferred is None:
                 return
             bid, was_full, proc, hs_before = deferred
             deferred = None
-            if n_added or n_disc:
+            if n_new or n_disc:
                 metrics.append({"batch": bid, "event": "discovery",
-                                "candidates": n_added,
+                                "candidates": n_new,
                                 "enqueued": n_disc})
             if ckpt_writer is not None:
                 ckpt_writer.join()
             if was_full:
+                # periodic full snapshot: the localCheckpoint taken at
+                # the state transition truncates the anti-join lineage
+                # executor-side; the write reads the checkpointed
+                # blocks (plus any discovered rows), not the lineage
                 ckpt_writer = _BgTask(_write_ckpt, ckpt_root, bid,
                                       remaining, host_state)
             else:
+                # delta: bytes proportional to the batch, not the
+                # frontier
                 ckpt_writer = _BgTask(_write_delta_ckpt, ckpt_root, bid,
                                       proc, host_state, disc, hs_before)
 
         while True:
-            if max_batches is not None and n_batches >= max_batches:
-                # drain the outstanding prefetch so no schedule job runs
-                # past the return
-                if follow_links:
-                    (b, _ph, remaining, enqueued, n_enq2, disc_prev,
-                     n_disc) = pending.join()
-                    _flush_deferred(disc_prev, n_disc,
-                                    n_enq2 - n_enqueued)
-                    n_enqueued = n_enq2
-                else:
-                    b, _ph = pending.join()
-                b.unpersist()
-                break
             t0 = time.perf_counter()
-            if follow_links:
-                (batch, per_host, remaining, enqueued, n_enq2, disc_prev,
-                 n_disc) = pending.join()
-                if prev_docs is not None:
-                    prev_docs.unpersist()
-                    prev_docs = None
-                _flush_deferred(disc_prev, n_disc, n_enq2 - n_enqueued)
-                n_enqueued = n_enq2
-            else:
-                batch, per_host = pending.join()
+            (batch, per_host, remaining, enqueued, n_new, disc_prev,
+             n_disc) = pending.join()
+            if prev_docs is not None:
+                prev_docs.unpersist()
+                prev_docs = None
+            _flush_deferred(disc_prev, n_disc, n_new)
             admitted = sum(per_host.values())
-            if admitted == 0:
-                # empty schedule ⇒ remaining frontier is exhausted (capacity
-                # is ≥1 per host, so a non-empty frontier always admits rows)
+            # an empty schedule ⇒ the remaining frontier is exhausted
+            # (capacity is ≥1 per host, so a non-empty frontier always
+            # admits rows); at max_batches the prefetched schedule is
+            # drained unused, so no schedule job runs past the return
+            if admitted == 0 or (max_batches is not None
+                                 and n_batches >= max_batches):
                 batch.unpersist()
                 break
 
@@ -893,10 +876,11 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
                 remaining = remaining.join(processed, "crawl_seq",
                                            "left_anti")
             if not follow_links:
-                # follow mode launches the prefetch AFTER extraction:
-                # the next schedule depends on this batch's discovered
-                # links, which come out of the extraction parse
-                pending = _BgTask(_schedule, remaining, host_state)
+                # no links to wait for: the next schedule overlaps this
+                # batch's extraction (follow mode launches it after the
+                # extraction parse has produced the outlinks)
+                pending = _BgTask(_discover_schedule, remaining,
+                                  host_state, None, enqueued)
             t_sched = time.perf_counter()
 
             resources = _batch_resources(batch, world, sdf)
@@ -925,6 +909,11 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
                 docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
                 prev_docs = docs
                 sink.append_upserts(docs.drop("__outlinks"), batch_id)
+                links = docs.select(
+                    F.col("url").alias("src_url"),
+                    F.explode("__outlinks").alias("dst_url"))
+                pending = _BgTask(_discover_schedule, remaining,
+                                  host_state, links, enqueued)
             else:
                 sink.append_upserts(docs, batch_id)
             # count from the written delta's parquet FOOTERS, driver-side —
@@ -933,13 +922,6 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
             # trip for what is pure file metadata
             indexed = _parquet_rows(
                 os.path.join(sink.delta_root, f"batch={batch_id}"))
-            if follow_links:
-                links = docs.select(
-                    F.col("url").alias("src_url"),
-                    F.explode("__outlinks").alias("dst_url"))
-                pending = _BgTask(_discover_schedule, remaining,
-                                  host_state, links, enqueued,
-                                  n_enqueued)
             t_extract = time.perf_counter()
 
             # MOR maintenance: fold the delta log into the base when it
@@ -952,39 +934,10 @@ def run_crawl(spark: SparkSession, world_dir: str, out_dir: str,
                 sink.compact()
                 compacted = True
 
-            if follow_links:
-                # checkpoint write DEFERRED to the next pending.join():
-                # a full snapshot must include this batch's discovered
-                # rows, a delta must carry them for the resume replay
-                deferred = (batch_id, is_full, processed, hs_prev)
-            else:
-                if ckpt_writer is not None:
-                    # one writer outstanding at a time: batch K's
-                    # checkpoint is committed before batch K+1's is
-                    # written, so the on-disk marker sequence never has
-                    # gaps (resume's delta replay assumes a committed
-                    # prefix)
-                    ckpt_writer.join()
-                if is_full:
-                    # periodic full snapshot: the localCheckpoint (taken
-                    # at the state transition above) truncates the
-                    # anti-join lineage chain executor-side; the
-                    # frontier-sized parquet write + commit happen in
-                    # the background while the next batch crawls (the
-                    # write reads the checkpointed blocks, not the
-                    # lineage)
-                    ckpt_writer = _BgTask(_write_ckpt, ckpt_root,
-                                          batch_id, remaining,
-                                          host_state)
-                else:
-                    # delta checkpoint: bytes proportional to the batch,
-                    # not the frontier — the prefetch thread anti-joined
-                    # the same checkpointed processed set in memory
-                    # while the delta file + commit marker write in the
-                    # background
-                    ckpt_writer = _BgTask(_write_delta_ckpt, ckpt_root,
-                                          batch_id, processed,
-                                          host_state, None, hs_prev)
+            # checkpoint write DEFERRED to the next pending.join(): a
+            # full snapshot must include this batch's discovered rows,
+            # a delta must carry them for the resume replay
+            deferred = (batch_id, is_full, processed, hs_prev)
             metrics.append({"batch": batch_id, "admitted": admitted,
                             "indexed": indexed, "compacted": compacted,
                             "per_host_admitted": per_host,
@@ -1087,29 +1040,22 @@ def _write_ckpt(root: str, batch_id: int, remaining: DataFrame,
 def _ckpt_kind(root: str, batch_id: int) -> str:
     """'full' | 'delta' for a COMMITTED batch dir. The kind is recorded
     in the _COMMIT marker at commit time — the full-vs-delta decision
-    must never be re-derived from directory layout or from the current
-    ``ckpt_full_every`` argument: a crash can leave a torn ``remaining``
-    dir inside a batch that later committed as a delta, and a resume
-    with a different cadence must still classify historical batches
-    correctly. Legacy markers (pre-kind, body 'ok') fall back to
-    requiring a COMPLETE parquet write (``remaining/_SUCCESS``), so a
-    torn snapshot is never adopted as a frontier."""
+    is never re-derived from directory layout or from the current
+    ``ckpt_full_every`` argument: a resume with a different cadence
+    must still classify historical batches correctly. Any other marker
+    body raises ``ValueError`` naming the batch dir."""
     d = os.path.join(root, f"batch={batch_id}")
     with open(os.path.join(d, "_COMMIT")) as fh:
         kind = fh.read().strip()
-    if kind in ("full", "delta"):
-        return kind
-    return ("full" if os.path.exists(
-        os.path.join(d, "remaining", "_SUCCESS")) else "delta")
+    if kind not in ("full", "delta"):
+        raise ValueError(f"checkpoint {d}: _COMMIT marker holds "
+                         f"{kind!r}, expected 'full' or 'delta'")
+    return kind
 
 
 def _read_ckpt(spark: SparkSession, root: str, batch_id: int):
-    d = os.path.join(root, f"batch={batch_id}")
-    if os.path.isdir(os.path.join(d, "remaining")):
-        # legacy two-file layout (pre combined-write checkpoints)
-        return (spark.read.parquet(os.path.join(d, "remaining")),
-                spark.read.parquet(os.path.join(d, "host_state")))
-    st = spark.read.parquet(os.path.join(d, "state"))
+    st = spark.read.parquet(
+        os.path.join(root, f"batch={batch_id}", "state"))
     return (st.filter(F.col("crawl_seq").isNotNull())
             .drop("__hs_sleeptime"),
             st.filter(F.col("crawl_seq").isNull())
@@ -1119,36 +1065,34 @@ def _read_ckpt(spark: SparkSession, root: str, batch_id: int):
 
 def _write_delta_ckpt(root: str, batch_id: int, processed: DataFrame,
                       host_state: DataFrame,
-                      discovered: DataFrame | None = None,
-                      prev_host_state: DataFrame | None = None) -> None:
+                      discovered: DataFrame | None,
+                      prev_host_state: DataFrame) -> None:
     """Delta checkpoint: the batch's processed crawl_seq set (politeness-
-    capped — tiny) + host state + (follow-links mode) the batch's
-    link-discovered frontier rows, folded into ONE parquet write (one
-    Spark job, one commit — the fixed per-job driver latency is the
-    sandbox pipeline's dominant cost, BASELINE.md). Row kinds are
-    distinguished by the null pattern: processed rows carry crawl_seq
-    with NULL loc, discovered rows carry crawl_seq AND loc (the full
-    annotated frontier schema — the frontier GROWS between fulls, so
-    the resume replay must re-add them), host rows carry (host,
-    sleeptime) with NULL crawl_seq. O(batch) bytes, not O(frontier).
+    capped — tiny) + changed host rows + (follow-links mode) the
+    batch's link-discovered frontier rows, folded into ONE parquet
+    write (one Spark job, one commit — the fixed per-job driver latency
+    is the sandbox pipeline's dominant cost, BASELINE.md). Row kinds
+    are distinguished by the null pattern: processed rows carry
+    crawl_seq with NULL loc, discovered rows carry crawl_seq AND loc
+    (the full annotated frontier schema — the frontier GROWS between
+    fulls, so the resume replay must re-add them), host rows carry
+    (host, sleeptime) with NULL crawl_seq. O(batch) bytes, not
+    O(frontier).
 
-    ``prev_host_state``: the pre-transition host relation — when given,
-    only host rows whose sleeptime CHANGED this batch are written (the
-    429-doubled hosts, a handful), not the whole O(hosts) relation:
-    at 10^8 hosts a full copy per delta is O(hosts × batches) write
-    amplification for state that is immutable outside 429s. Resume
-    overlays delta host rows onto the last full snapshot last-wins per
-    host (_resume_state), which reads full-relation legacy deltas and
-    changed-only deltas identically."""
+    ``prev_host_state`` is the pre-transition host relation: only host
+    rows whose sleeptime CHANGED this batch are written (the 429-doubled
+    hosts, a handful), not the whole O(hosts) relation — at 10^8 hosts
+    a full copy per delta is O(hosts × batches) write amplification for
+    state that is immutable outside 429s. Resume overlays delta host
+    rows onto the last full snapshot last-wins per host
+    (_resume_state)."""
     d = os.path.join(root, f"batch={batch_id}")
-    hs = host_state
-    if prev_host_state is not None:
-        prev = prev_host_state.select(
-            "host", F.col("sleeptime").alias("__prev"))
-        hs = (host_state.join(prev, "host", "left")
-              .filter(F.col("__prev").isNull()
-                      | (F.col("sleeptime") != F.col("__prev")))
-              .select("host", "sleeptime"))
+    prev = prev_host_state.select(
+        "host", F.col("sleeptime").alias("__prev"))
+    hs = (host_state.join(prev, "host", "left")
+          .filter(F.col("__prev").isNull()
+                  | (F.col("sleeptime") != F.col("__prev")))
+          .select("host", "sleeptime"))
     combined = processed.select(
         "crawl_seq",
         F.lit(None).cast("string").alias("host"),
@@ -1166,107 +1110,49 @@ def _write_delta_ckpt(root: str, batch_id: int, processed: DataFrame,
         fh.write("delta")
 
 
-def _read_delta_ckpt(spark: SparkSession, root: str, batch_id: int):
-    d = os.path.join(root, f"batch={batch_id}")
-    if not os.path.isdir(os.path.join(d, "state")):
-        # legacy two-file delta layout (pre combined-write checkpoints):
-        # processed/ + host_state/ dirs — mirror _read_ckpt's legacy
-        # branch so a resume spanning an upgrade never hits
-        # path-not-found on old deltas
-        return (spark.read.parquet(os.path.join(d, "processed"))
-                .select("crawl_seq"),
-                spark.read.parquet(os.path.join(d, "host_state"))
-                .select("host", "sleeptime"))
-    st = spark.read.parquet(os.path.join(d, "state"))
-    proc = st.filter(F.col("crawl_seq").isNotNull())
-    if "loc" in st.columns:
-        # follow-links deltas also carry discovered frontier rows
-        # (crawl_seq AND loc non-null) — not part of the processed set
-        proc = proc.filter(F.col("loc").isNull())
-    return (proc.select("crawl_seq"),
-            st.filter(F.col("crawl_seq").isNull())
-            .select("host", "sleeptime"))
-
-
 def _resume_state(spark: SparkSession, root: str, committed: list):
     """Reconstruct (remaining, host_state, last_full) from the last
-    committed full snapshot plus the processed deltas after it. Batch
-    kind comes from the _COMMIT marker (``_ckpt_kind``), never from
-    directory layout — a torn 'remaining' dir from a crashed full-
-    snapshot attempt inside a delta-committed batch must not be
-    adopted as a frontier."""
-    last = committed[-1]
+    committed full snapshot plus the deltas after it, read in one bulk
+    scan. Batch kind comes from the _COMMIT marker (``_ckpt_kind``)."""
     fulls = [b for b in committed if _ckpt_kind(root, b) == "full"]
-    last_full = max(b for b in fulls if b <= last)
-    remaining, full_hs = _read_ckpt(spark, root, last_full)
-    delta_ids = [b for b in committed if last_full < b <= last]
-    if delta_ids:
-        # a resume may span an upgrade: read combined-state deltas in
-        # one bulk scan, but fall back per batch to the legacy
-        # processed/ dir when state/ is absent (mirrors _read_ckpt's
-        # legacy branch — _read_delta_ckpt has the same fallback)
-        state_paths = [os.path.join(root, f"batch={b}", "state")
-                       for b in delta_ids]
-        legacy = [os.path.join(root, f"batch={b}", "processed")
-                  for b, p in zip(delta_ids, state_paths)
-                  if not os.path.isdir(p)]
-        processed = None
-        # host-state overlay sources, each row tagged with its batch id
-        # (parsed from the file path): deltas persist only the host
-        # rows that CHANGED at their batch (legacy deltas carry the
-        # full relation — the last-wins fold reads both identically)
-        hs_rows = [full_hs.select(
-            "host", "sleeptime", F.lit(last_full).alias("__b"))]
-        # anchored to the state dir segment: a bare "batch=(\d+)/"
-        # would match the FIRST occurrence in the path, so an out_dir
-        # that itself contains a batch=<n>/ directory would mis-tag
-        # every row with that foreign id
+    last_full = max(fulls)
+    remaining, host_state = _read_ckpt(spark, root, last_full)
+    delta_states = [os.path.join(root, f"batch={b}", "state")
+                    for b in committed if b > last_full]
+    if delta_states:
+        # each host row is tagged with its batch id, parsed from the
+        # file path and anchored to the state dir segment: a bare
+        # "batch=(\d+)/" would match the FIRST occurrence in the path,
+        # so an out_dir that itself contains a batch=<n>/ directory
+        # would mis-tag every row with that foreign id
         _bid = F.regexp_extract(
-            F.input_file_name(),
-            r"batch=(-?\d+)/(?:state|host_state)/", 1).cast("long")
-        modern = [p for p in state_paths if os.path.isdir(p)]
-        if modern:
-            # mergeSchema: follow-links deltas carry the full annotated
-            # frontier schema for discovered rows; plain deltas carry
-            # only (crawl_seq, host, sleeptime) — a resume may span
-            # both
-            st = (spark.read.option("mergeSchema", "true")
-                  .parquet(*modern).withColumn("__b", _bid))
-            hs_rows.append(st.filter(F.col("crawl_seq").isNull())
-                           .select("host", "sleeptime", "__b"))
-            proc = st.filter(F.col("crawl_seq").isNotNull())
-            if "loc" in st.columns:
-                # discovered rows (crawl_seq AND loc non-null) GROW the
-                # frontier between fulls — re-add them before the
-                # processed anti-join (a discovered row later processed
-                # is removed by the anti-join as usual)
-                disc = st.filter(F.col("crawl_seq").isNotNull()
-                                 & F.col("loc").isNotNull())
-                remaining = remaining.unionByName(
-                    disc.select(*remaining.columns))
-                proc = proc.filter(F.col("loc").isNull())
-            processed = proc.select("crawl_seq")
-        if legacy:
-            old = spark.read.parquet(*legacy).select("crawl_seq")
-            processed = (old if processed is None
-                         else processed.unionByName(old))
-            legacy_hs = [os.path.join(os.path.dirname(p), "host_state")
-                         for p in legacy]
-            legacy_hs = [p for p in legacy_hs if os.path.isdir(p)]
-            if legacy_hs:
-                hs_rows.append(spark.read.parquet(*legacy_hs)
-                               .withColumn("__b", _bid)
-                               .select("host", "sleeptime", "__b"))
-        remaining = remaining.join(processed, "crawl_seq", "left_anti")
-    if last == last_full:
-        host_state = full_hs
-    else:
-        hs_all = hs_rows[0]
-        for extra in hs_rows[1:]:
-            hs_all = hs_all.unionByName(extra)
-        host_state = (hs_all.groupBy("host")
-                      .agg(F.max_by("sleeptime", "__b")
-                           .alias("sleeptime")))
+            F.input_file_name(), r"batch=(-?\d+)/state/", 1).cast("long")
+        # mergeSchema: follow-links deltas carry the full annotated
+        # frontier schema for discovered rows; plain deltas carry only
+        # (crawl_seq, host, sleeptime) — a resume may span both
+        st = (spark.read.option("mergeSchema", "true")
+              .parquet(*delta_states).withColumn("__b", _bid))
+        proc = st.filter(F.col("crawl_seq").isNotNull())
+        if "loc" in st.columns:
+            # discovered rows (crawl_seq AND loc non-null) GROW the
+            # frontier between fulls — re-add them before the processed
+            # anti-join (a discovered row later processed is removed by
+            # the anti-join as usual)
+            disc = proc.filter(F.col("loc").isNotNull())
+            remaining = remaining.unionByName(
+                disc.select(*remaining.columns))
+            proc = proc.filter(F.col("loc").isNull())
+        remaining = remaining.join(proc.select("crawl_seq"), "crawl_seq",
+                                   "left_anti")
+        # deltas persist only the host rows that CHANGED at their
+        # batch: overlay them onto the full snapshot, last-wins per host
+        host_state = (
+            host_state.select("host", "sleeptime",
+                              F.lit(last_full).alias("__b"))
+            .unionByName(st.filter(F.col("crawl_seq").isNull())
+                         .select("host", "sleeptime", "__b"))
+            .groupBy("host")
+            .agg(F.max_by("sleeptime", "__b").alias("sleeptime")))
     return remaining, host_state, last_full
 
 

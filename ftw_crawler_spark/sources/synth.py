@@ -419,7 +419,7 @@ def build_preexisting_index(entries: DataFrame, pages: DataFrame,
         md5_uuid_col(F.col("loc")).alias("UID"),
         F.col("loc").alias("url"),
         modified.alias("modified"),
-        csid.getItem(F.col("site_id")).alias("crawler_site_id"))
+        csid[F.col("site_id")].alias("crawler_site_id"))
 
     # purge targets: in index, under site prefix, NOT in any sitemap
     spark = entries.sparkSession

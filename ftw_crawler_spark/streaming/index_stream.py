@@ -48,10 +48,10 @@ def change_schema(spark: SparkSession, index_root: str) -> T.StructType:
     (UID, op_seq, is_delete); document columns read as NULL there),
     plus the ``batch`` partition-directory column — forced to STRING:
     partition inference types it integer while every dir happens to be
-    numeric, and the first ``batch=K_deletes`` / ``batch=stream_NNN``
-    dir would then stream with a NULL generation tag. Cost: one
-    schema-merge pass over the log's parquet footers (a small Spark
-    job — grows with generations until the next compaction); with no
+    numeric, and the first ``batch=K_deletes`` dir would then stream
+    with a NULL generation tag. Cost: one schema-merge pass over the
+    log's parquet footers (a small Spark job — grows with generations
+    until the next compaction); with no
     generations yet, falls back to the base snapshot's footer plus the
     log columns, so a consumer can start tailing a fresh or
     just-compacted sink."""
@@ -102,7 +102,6 @@ def stream_index_changes(spark: SparkSession, index_root: str,
                        F.lit("delete")).otherwise(F.lit("upsert")))
             .withColumn(
                 "_generation",
-                F.regexp_extract(F.col("batch"),
-                                 r"^(?:stream_)?(-?\d+)", 1)
+                F.regexp_extract(F.col("batch"), r"^(-?\d+)", 1)
                  .cast("long"))
             .drop("is_delete", "batch"))

@@ -278,72 +278,23 @@ def test_relation_bloom_path_same_final_state(spark, world, engine_run,
     assert a == b
 
 
-def test_resume_reads_legacy_two_file_checkpoint(spark, world,
-                                                 engine_run,
-                                                 tmp_path_factory):
-    """Checkpoints written by the pre-combined-write layout (separate
-    remaining/ + host_state/ parquet dirs, marker body 'ok') must
-    still resume — a long crawl can crash mid-upgrade."""
+def test_resume_rejects_unknown_commit_marker(spark, world,
+                                              tmp_path_factory):
+    """The checkpoint kind lives only in the _COMMIT marker body: a
+    body other than 'full' or 'delta' stops the resume with an error
+    naming the batch dir, instead of guessing the kind from the
+    directory layout."""
     import os
-    import shutil
 
-    from ftw_crawler_spark.plans.crawl import _read_ckpt
-
-    out = str(tmp_path_factory.mktemp("legacy"))
+    out = str(tmp_path_factory.mktemp("badmarker"))
     run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
               batch_seconds=5.0, max_batches=1)
-    d = os.path.join(out, "checkpoints", "batch=-1")
-    remaining, host_state = _read_ckpt(spark, out + "/checkpoints", -1)
-    remaining = remaining.localCheckpoint()       # read before rewrite
-    host_state = host_state.localCheckpoint()
-    shutil.rmtree(os.path.join(d, "state"))
-    remaining.write.parquet(os.path.join(d, "remaining"))
-    host_state.write.parquet(os.path.join(d, "host_state"))
+    d = os.path.join(out, "checkpoints", "batch=0")
     with open(os.path.join(d, "_COMMIT"), "w") as fh:
-        fh.write("ok")                            # legacy marker body
-    resumed = run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-                        batch_seconds=5.0, resume=True)
-    a = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(engine_run).select("url", "crawl_seq").collect()}
-    b = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(resumed).select("url", "crawl_seq").collect()}
-    assert a == b
-
-
-def test_resume_reads_legacy_delta_checkpoint(spark, world, engine_run,
-                                              tmp_path_factory):
-    """Pre-upgrade DELTA checkpoints used separate processed/ +
-    host_state/ dirs (marker body 'ok'). A crawl crashed mid-upgrade
-    can hold legacy deltas AFTER its last full snapshot — both the
-    bulk delta replay (_resume_state) and the host-state read
-    (_read_delta_ckpt) must fall back per batch."""
-    import os
-    import shutil
-
-    from ftw_crawler_spark.plans.crawl import _read_delta_ckpt
-
-    out = str(tmp_path_factory.mktemp("legacydelta"))
-    run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-              batch_seconds=5.0, max_batches=2)
-    ckpt = os.path.join(out, "checkpoints")
-    # convert the LAST committed delta (batch=1) to the legacy layout —
-    # exercises both the _resume_state replay and the host-state path
-    d = os.path.join(ckpt, "batch=1")
-    processed, host_state = _read_delta_ckpt(spark, ckpt, 1)
-    processed = processed.localCheckpoint()       # read before rewrite
-    host_state = host_state.localCheckpoint()
-    shutil.rmtree(os.path.join(d, "state"))
-    processed.write.parquet(os.path.join(d, "processed"))
-    host_state.write.parquet(os.path.join(d, "host_state"))
-    with open(os.path.join(d, "_COMMIT"), "w") as fh:
-        fh.write("ok")                            # legacy marker body
-    resumed = run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
-                        batch_seconds=5.0, resume=True)
-    a = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(engine_run).select("url", "crawl_seq").collect()}
-    b = {(r["url"], r["crawl_seq"]) for r in
-         _crawled(resumed).select("url", "crawl_seq").collect()}
-    assert a == b
+        fh.write("ok")
+    with pytest.raises(ValueError, match="batch=0"):
+        run_crawl(spark, world, out, crawl_time=CRAWL_TIME,
+                  batch_seconds=5.0, resume=True)
 
 
 def test_priority_mode_same_final_state(spark, world, engine_run,
